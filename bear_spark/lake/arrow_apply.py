@@ -1,21 +1,25 @@
-"""Arrow-native per-bucket COW apply — the merge hot path.
+"""Arrow-native per-bucket COW apply — the one merge path.
 
-The SQL apply path shuffles (batch ∪ touched-bucket table rows) through
-an exchange, aggregates, and writes via Spark's writer — the whole table
-crosses the shuffle every merge. This path exploits what the table
-already knows: data files are bucket-partitioned on shared storage, so
-only the BATCH needs to move. ``groupBy(_bucket).applyInPandas`` routes
-each bucket's change events to one task; the task reads that bucket's
-existing files directly (pyarrow, column-parallel C++), applies
-last-writer-wins vectorized in pandas (stable sort by (ts, lsn) +
-group-tail), and writes the replacement files itself — the same
-file-granularity copy-on-write an Iceberg/Delta COW writer performs,
-with the engine's two-phase snapshot commit unchanged on top.
+Data files are bucket-partitioned on shared storage, so only the BATCH
+needs to move: ``groupBy(_bucket).applyInPandas`` routes each bucket's
+change events to one task, and the task reads that bucket's existing
+files directly (pyarrow, C++), applies last-writer-wins and writes the
+replacement files itself — the file-granularity copy-on-write an
+Iceberg/Delta COW writer performs, with the engine's two-phase snapshot
+commit on top. The table rows never cross the shuffle.
 
-Everything is Arrow-batch vectorized — no per-row Python anywhere
-(`input_hint`: "vectorized pandas/Arrow UDFs (no per-row Python)
-throughout"). Task retries are idempotent: each bucket writes to a
-deterministic file name via tmp + ``os.replace``.
+Last-writer-wins is ONE stable sort by ``(key…, ts, lsn)`` with nulls
+first (a null event time always loses), a ``take``, and a filter that
+keeps the last row of each key run (two null keys count as the same
+run). ``sort_indices``/``take``/``filter`` accept every Arrow type, so
+array, map, struct and decimal payloads take the same kernel as flat
+ones; the payload schema comes from PySpark's own Spark→Arrow type
+mapping. A sort beats a hash group-by here because the output has to
+be key-sorted anyway (the lake file sort order).
+
+Everything is Arrow-batch vectorized — no per-row Python. Task retries
+are idempotent: each bucket writes to a deterministic file name via
+tmp + ``os.replace``.
 
 Reference analog: the store-side PK upsert the reference delegates to
 Milvus (reference: bear/db.py:72-83) — here the "store" is the lake and
@@ -28,57 +32,20 @@ import os
 import uuid
 from collections.abc import Callable
 
-_ARROW_TYPES = {
-    "string": "string",
-    "binary": "binary",
-    "integer": "int32",
-    "long": "int64",
-    "short": "int16",
-    "byte": "int8",
-    "float": "float32",
-    "double": "float64",
-    "boolean": "bool_",
-    "date": "date32",
-}
 
-
-def _arrow_type(pa, spark_typename):
-    if not isinstance(spark_typename, str):
-        # nested types (array/map/struct JSON objects): Arrow's hash
-        # "last" aggregation has no kernels for them — SQL path instead
-        raise TypeError(f"unsupported payload type for arrow apply: {spark_typename}")
-    if spark_typename == "timestamp":
-        return pa.timestamp("us", tz="UTC")
-    name = _ARROW_TYPES.get(spark_typename)
-    if name is None:  # decimal(p,s) etc. — same story as nested
-        raise TypeError(f"unsupported payload type for arrow apply: {spark_typename}")
-    return getattr(pa, name)()
-
-
-def _arrow_schema(pa, spark_json: dict):
-    """Flat Spark StructType JSON -> pyarrow schema (payload types only)."""
-    return pa.schema(
-        [(f["name"], _arrow_type(pa, f["type"])) for f in spark_json["fields"]]
-    )
-
-
-def supports_schema(spark_json: dict) -> bool:
-    """True if every payload column maps onto the kernel's Arrow type
-    set (flat primitives + binary). Tables with array/map/struct or
-    decimal payloads — e.g. an embedding ``array<float>`` — take the
-    Catalyst SQL apply path instead of failing the default merge."""
+def arrow_schema(spark_schema):
+    """Spark StructType -> pyarrow schema through PySpark's own type
+    mapping (every Spark type; timestamps UTC). Top-level fields stay
+    nullable, like the Parquet files Spark itself writes."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    try:
-        _arrow_schema(pa, spark_json)
-        return True
-    except TypeError:
-        return False
+    return pa.schema([f.with_nullable(True) for f in to_arrow_schema(spark_schema)])
 
 
 def make_apply_kernel(
-    files_by_bucket: dict[int, list[tuple]] | None,
-    target_schema_json: dict,
+    manifests_by_bucket: dict[int, str],
+    target_schema,
     stage_dir: str,
     key_cols: list[str],
     seq_col: str,
@@ -86,30 +53,22 @@ def make_apply_kernel(
     drop_late: bool = False,
     table_root: str = "",
     compression: str = "snappy",
-    manifests_by_bucket: dict[int, str] | None = None,
     target_file_rows: int = 2_000_000,
 ) -> Callable:
     """Build the applyInPandas kernel for one merge.
 
-    The kernel learns its bucket's existing data files one of two ways:
-
-    - ``manifests_by_bucket`` (preferred): per bucket, the rel path of
-      its immutable manifest document; the TASK reads its own manifest
-      from shared storage (same access path as the data files). The
-      closure then carries O(num_buckets) strings instead of the whole
-      file inventory — at millions of files, serializing the inventory
-      into every task closure is itself a scale bug.
-    - ``files_by_bucket`` (legacy inline snapshots): per bucket,
-      ``(rel_path, key_min, key_max)`` tuples shipped directly.
-
-    Either way the entries cover all schema versions — alignment to the
-    target schema happens here, which is exactly the
-    registry-reconciler's "rewrite Arrow batches" step. Files whose
-    first-key [min, max] range contains NO batch key are CARRIED OVER
-    untouched (their rel paths come back in the ``kept`` column and the
-    driver re-references them in the new snapshot) — task memory is
-    bounded by the files a batch actually touches, not the bucket. A
-    missing range (None) means "assume it intersects".
+    ``manifests_by_bucket`` maps each bucket to the rel path of its
+    immutable manifest document; the TASK reads its own manifest from
+    shared storage (same access path as the data files), so the closure
+    carries O(num_buckets) strings instead of the whole file inventory.
+    The entries cover all schema versions — alignment to the target
+    schema happens here, which is exactly the registry-reconciler's
+    "rewrite Arrow batches" step. Files whose first-key [min, max] range
+    contains NO batch key are CARRIED OVER untouched (their rel paths
+    come back in the ``kept`` column and the driver re-references them
+    in the new snapshot) — task memory is bounded by the files a batch
+    actually touches, not the bucket. A missing range (None) means
+    "assume it intersects".
 
     Besides applying LWW, each group returns its slice of the BATCH
     stats — per (source_partition, segment) contiguous offset range,
@@ -117,6 +76,8 @@ def make_apply_kernel(
     event time — as a JSON column the driver folds into the commit.
     This makes merge a single job: no separate stats pass, no cache.
     """
+    # built on the driver; the pickled closure carries the Arrow schema
+    target = arrow_schema(target_schema)
 
     def kernel(pdf):
         import json as _json
@@ -225,7 +186,6 @@ def make_apply_kernel(
                 # (Pre-combine is disabled on drop-late tables: the
                 # subset winner could be late while a runner-up is not.)
                 pdf = pdf.loc[~late_mask]
-        target = _arrow_schema(pa, target_schema_json)
         payload_names = [f.name for f in target]
         # event shape: payload + _bucket/_op/_elsn
         evt_schema = pa.schema(
@@ -247,14 +207,17 @@ def make_apply_kernel(
             ]
         )
 
-        def align_to_events(tbl: pa.Table, op_arr, elsn_arr) -> pa.Table:
+        def align_to_events(tbl: pa.Table) -> pa.Table:
+            """Existing-file rows -> evt_schema: a tombstone becomes a
+            'D' event, a live row a 'U' event, at its stored lsn."""
             cols = []
             n = tbl.num_rows
+            deleted = pc.fill_null(tbl.column("_deleted").cast(pa.bool_()), False)
             for f in evt_schema:
                 if f.name == "_op":
-                    cols.append(op_arr)
+                    cols.append(pc.if_else(deleted, pa.scalar("D"), pa.scalar("U")))
                 elif f.name == "_elsn":
-                    cols.append(elsn_arr.cast(pa.int64()))
+                    cols.append(tbl.column("_lsn").cast(pa.int64()))
                 elif f.name == "_bucket":
                     cols.append(pa.array([bucket] * n, pa.int32()))
                 elif f.name in tbl.column_names:
@@ -281,11 +244,26 @@ def make_apply_kernel(
                     cols.append(pa.nulls(n, f.type))
             return pa.table(cols, schema=out_schema)
 
+        def run_ends(tbl: pa.Table) -> pa.Array:
+            """True on the last row of each run of equal keys in a
+            key-sorted table. ``not_equal`` on a null is null, so the
+            coalesce makes two null keys one run and a null beside a
+            value a run boundary."""
+            ends = None
+            for k in key_cols:
+                col = tbl.column(k).combine_chunks()
+                a, b = col[:-1], col[1:]
+                d = pc.coalesce(
+                    pc.not_equal(a, b), pc.xor(pc.is_null(a), pc.is_null(b))
+                )
+                ends = d if ends is None else pc.or_(ends, d)
+            return pa.concat_arrays([ends, pa.array([True])])
+
         # --- batch side (already target-aligned by the JVM projection) ---
-        batch = pa.Table.from_pandas(pdf, preserve_index=False)
-        batch = align_to_events(
-            batch, batch.column("_op").cast(pa.string()), batch.column("_elsn")
-        )
+        # (the schema picks and orders the columns and types nested
+        # cells, which inference from pandas objects would get wrong —
+        # e.g. a map's dict reads as a struct)
+        batch = pa.Table.from_pandas(pdf, schema=evt_schema, preserve_index=False)
 
         # --- existing files: read only those the batch can touch ------
         # file ranges come from parquet footers (files are key-sorted);
@@ -293,23 +271,23 @@ def make_apply_kernel(
         # over byte-identical — at 10^10 rows this is the difference
         # between O(touched files) and O(whole bucket) per task
         batch_keys = pdf[key_cols[0]]
-        if manifests_by_bucket is not None:
-            mrel = manifests_by_bucket.get(bucket)
-            if mrel is None:
-                bucket_files = []
-            else:
-                with open(os.path.join(table_root, mrel)) as mf:
-                    bucket_files = [
-                        (fi["path"], fi.get("kmin"), fi.get("kmax"))
-                        for fi in _json.load(mf)["files"]
-                    ]
-        else:
-            bucket_files = (files_by_bucket or {}).get(bucket, ())
+        # a null key lies outside every footer range, yet the file
+        # holding the current null-key row must still be read: it
+        # contends with the batch's null-key events
+        null_key = bool(batch_keys.isna().any())
+        bucket_files = []
+        mrel = manifests_by_bucket.get(bucket)
+        if mrel is not None:
+            with open(os.path.join(table_root, mrel)) as mf:
+                bucket_files = [
+                    (fi["path"], fi.get("kmin"), fi.get("kmax"))
+                    for fi in _json.load(mf)["files"]
+                ]
         kept_paths = []
         to_read = []
         for rel, kmin, kmax in bucket_files:
             intersects = True
-            if kmin is not None and kmax is not None:
+            if kmin is not None and kmax is not None and not null_key:
                 try:
                     intersects = bool(
                         ((batch_keys >= kmin) & (batch_keys <= kmax)).any()
@@ -325,9 +303,9 @@ def make_apply_kernel(
         # across a bucket's files (merge emits LWW winners; the range
         # pull rule keeps a key in exactly one file), so an existing row
         # whose key is NOT in the batch is already its own winner — it
-        # skips the (ts, lsn) sort + group-last entirely and goes
-        # straight to the key-sorted rewrite. Sort/aggregate traffic is
-        # O(batch + contended), not O(touched files) — the difference
+        # skips the LWW sort entirely and goes straight to the
+        # key-sorted rewrite. Sort traffic is O(batch + contended), not
+        # O(touched files) — the difference
         # between a point update and a full-file re-merge at 10^10 rows.
         kset = pc.unique(batch.column(key_cols[0]))
         ktype = target.field(key_cols[0]).type
@@ -343,45 +321,30 @@ def make_apply_kernel(
             if untouched.num_rows:
                 passthrough.append(align_to_out(untouched))
             if cont.num_rows:
-                deleted = pc.fill_null(cont.column("_deleted").cast(pa.bool_()), False)
-                op = pc.if_else(deleted, pa.scalar("D"), pa.scalar("U"))
-                parts.append(
-                    align_to_events(cont, op.cast(pa.string()), cont.column("_lsn"))
-                )
+                parts.append(align_to_events(cont))
         events = pa.concat_tables(parts)
 
-        # --- LWW, pure Arrow: sort by (seq, lsn) ascending (nulls
-        # first, so a null event time always loses), then ordered
-        # group-by taking the LAST row per key — all C++; the row data
-        # never materializes as Python objects. (Group OUTPUT order is
-        # not guaranteed by the hash grouper, so file sort order is
-        # applied explicitly below.)
+        # --- LWW, pure Arrow: one stable sort by (key…, seq, lsn) with
+        # nulls first (a null event time always loses), then keep the
+        # last row of each key run — all C++; the row data never
+        # materializes as Python objects, and sort/take/filter have
+        # kernels for every payload type (list, map, struct, decimal)
         idx = pc.sort_indices(
             events,
-            sort_keys=[(seq_col, "ascending"), ("_elsn", "ascending")],
+            sort_keys=[(k, "ascending") for k in key_cols]
+            + [(seq_col, "ascending"), ("_elsn", "ascending")],
             null_placement="at_start",
         )
         events = events.take(idx)
-        val_cols = [c for c in events.column_names if c not in key_cols]
-        # skip_nulls=False: "last" must return the winning row's value
-        # even when it is null (a newer event may legitimately null a
-        # column); the default would resurrect stale non-null values
-        last_opts = pc.ScalarAggregateOptions(skip_nulls=False)
-        win = events.group_by(key_cols, use_threads=False).aggregate(
-            [(c, "last", last_opts) for c in val_cols]
-        )
-
-        def wcol(name: str):
-            return win.column(name if name in key_cols else f"{name}_last")
+        win = events.filter(run_ends(events)) if events.num_rows else events
 
         # --- write replacement files (file-granularity COW) --------------
-        del_mask = pc.equal(wcol("_op"), pa.scalar("D"))
-        del_mask = pc.fill_null(del_mask, False)
+        del_mask = pc.fill_null(pc.equal(win.column("_op"), pa.scalar("D")), False)
         full = pa.table(
             [
-                *[wcol(n) for n in payload_names],
-                wcol("_bucket"),
-                wcol("_elsn"),
+                *[win.column(c) for c in payload_names],
+                win.column("_bucket"),
+                win.column("_elsn"),
                 del_mask,
             ],
             schema=out_schema,
@@ -431,7 +394,7 @@ def make_apply_kernel(
                     "max_key_rows": max_key_rows,
                     # work-reduction evidence for the contended-row
                     # split, wall-clock-independent: rows that entered
-                    # the (ts, lsn) LWW sort vs rows that bypassed it
+                    # the LWW sort vs rows that bypassed it
                     "lww_rows": int(events.num_rows),
                     "passthrough_rows": int(
                         sum(t.num_rows for t in passthrough)

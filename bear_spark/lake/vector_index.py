@@ -341,7 +341,7 @@ class VectorIndex:
             if f.endswith(".parquet")
         ]
 
-        changed_keys = ch.select(*id_cols).distinct()
+        changed_keys = assigned_ch.select(*id_cols).distinct()
         parts = []
         for rel, ds in by_gen.items():
             old = self.table.spark.read.option(
@@ -417,7 +417,14 @@ class VectorIndex:
         from only as many smallest-margin planes as the remaining
         budget needs, so the work is O(budget), never C(n_planes, h) —
         at n_planes=24 the full 2-shell enumeration is ~300 combos but
-        a 64-budget probe examines at most ~80."""
+        a 64-budget probe examines at most ~80.
+
+        The pool makes the order approximate when the budget truncates
+        a shell: combos are drawn only from the smallest ``pool`` planes
+        with C(pool, h) >= the remaining budget, so a combo that uses a
+        plane just outside the pool is never visited even when its
+        margin sum is smaller (e.g. m0+m3 < m1+m2 with pool {0, 1, 2}).
+        Shells the budget does not truncate are exact."""
         m = self.meta
         qv = np.asarray(list(query), dtype=float)
         if m["kind"] == "ivf":

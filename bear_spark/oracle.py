@@ -21,10 +21,13 @@ def replay(
     seq_cols: Sequence[str] = ("ts", "lsn"),
     op_col: str = "op",
 ) -> pd.DataFrame:
-    """Final live state after applying all ``events`` under LWW."""
+    """Final live state after applying all ``events`` under LWW.
+
+    Nulls follow the engine's contract: a null event time sorts first
+    (it always loses), and all null keys are one key."""
     key_cols, seq_cols = list(key_cols), list(seq_cols)
-    ordered = events.sort_values(seq_cols, kind="mergesort")
-    last = ordered.groupby(key_cols, as_index=False).tail(1)
+    ordered = events.sort_values(seq_cols, kind="mergesort", na_position="first")
+    last = ordered.groupby(key_cols, as_index=False, dropna=False).tail(1)
     live = last[last[op_col] != "D"].drop(columns=[op_col])
     return live.sort_values(key_cols, kind="mergesort").reset_index(drop=True)
 

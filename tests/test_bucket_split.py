@@ -27,20 +27,33 @@ SCHEMA = T.StructType(
 )
 
 
-def _events(spark, rows):
-    """rows: (conv_id, turn_idx, text, ts_str, op, lsn)."""
+# A flat payload and one with a nested array<double> column; the ids
+# name the merge route each took when nested payloads had a separate
+# SQL merge path. Both now merge through the Arrow kernel.
+PAYLOADS = [pytest.param(False, id="arrow"), pytest.param(True, id="sql")]
+
+
+def _events(spark, rows, nested=False):
+    """rows: (conv_id, turn_idx, text, ts_str, op, lsn); ``nested`` adds
+    an ``emb`` array column derived from the lsn."""
     df = spark.createDataFrame(
         rows,
         "conv_id string, turn_idx int, text string, ts string, op string, lsn long",
     )
-    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    if nested:
+        df = df.withColumn("emb", F.array(F.col("lsn").cast("double"), F.lit(0.5)))
+    return df
 
 
-def _mk(spark, root, num_buckets=4):
+def _mk(spark, root, num_buckets=4, nested=False):
+    schema = SCHEMA
+    if nested:
+        schema = T.StructType(SCHEMA.fields + [T.StructField("emb", T.ArrayType(T.DoubleType()))])
     return LakeTable.create(
         spark,
         str(root),
-        SCHEMA,
+        schema,
         key_cols=["conv_id", "turn_idx"],
         seq_col="ts",
         num_buckets=num_buckets,
@@ -55,10 +68,10 @@ def _batch_a(n_convs=40):
     ]
 
 
-def _lww_oracle(spark, all_rows):
+def _lww_oracle(spark, all_rows, nested=False):
     """Expected final table state: LWW by (ts, lsn) per key, deletes win
     by vanishing — the same contract merge() implements."""
-    ev = _events(spark, all_rows)
+    ev = _events(spark, all_rows, nested)
     w = F.struct(F.col("ts"), F.col("lsn"))
     win = (
         ev.groupBy("conv_id", "turn_idx")
@@ -67,14 +80,18 @@ def _lww_oracle(spark, all_rows):
     )
     return (
         win.filter(F.col("op") != "D")
-        .select("conv_id", "turn_idx", "text", "ts")
+        .select(*_state_cols(nested))
         .sort("conv_id", "turn_idx")
         .collect()
     )
 
 
-def _state(tbl):
-    return tbl.read().select("conv_id", "turn_idx", "text", "ts").sort(
+def _state_cols(nested=False):
+    return ["conv_id", "turn_idx", "text", "ts"] + (["emb"] if nested else [])
+
+
+def _state(tbl, nested=False):
+    return tbl.read().select(*_state_cols(nested)).sort(
         "conv_id", "turn_idx"
     ).collect()
 
@@ -106,11 +123,11 @@ def test_split_all_at_once_preserves_state(spark, tmp_path):
     assert tbl.lookup("c001").filter(F.col("turn_idx") == 0).collect()[0]["text"] == "post-split"
 
 
-@pytest.mark.parametrize("mode", ["arrow", "sql"])
-def test_incremental_split_interleaves_with_merges(spark, tmp_path, mode):
-    tbl = _mk(spark, tmp_path / f"t2_{mode}", num_buckets=4)
+@pytest.mark.parametrize("nested", PAYLOADS)
+def test_incremental_split_interleaves_with_merges(spark, tmp_path, nested):
+    tbl = _mk(spark, tmp_path / "t2", num_buckets=4, nested=nested)
     a = _batch_a()
-    tbl.merge(_events(spark, a), mode=mode)
+    tbl.merge(_events(spark, a, nested))
 
     # split the first two old buckets, leaving the frontier mid-table
     out = tbl.split_buckets(factor=2, max_buckets=1)
@@ -130,7 +147,7 @@ def test_incremental_split_interleaves_with_merges(spark, tmp_path, mode):
         (f"c{i:03d}", 2, None, "2024-03-01 00:00:01", "D", 200000 + i)
         for i in range(0, 40, 3)
     ]
-    tbl.merge(_events(spark, b), mode=mode)
+    tbl.merge(_events(spark, b, nested))
 
     # mid-split lookups prune to the correct side of the frontier
     for cid in ("c000", "c005", "c017", "c031"):
@@ -141,9 +158,9 @@ def test_incremental_split_interleaves_with_merges(spark, tmp_path, mode):
     out = tbl.split_buckets()
     assert out["complete"] is True and out["num_buckets"] == 8
     c = [("c007", 0, "final", "2024-04-01 00:00:00", "U", 300000)]
-    tbl.merge(_events(spark, c), mode=mode)
+    tbl.merge(_events(spark, c, nested))
 
-    assert _state(tbl) == _lww_oracle(spark, a + b + c)
+    assert _state(tbl, nested) == _lww_oracle(spark, a + b + c, nested)
 
 
 def test_split_factor_validation(spark, tmp_path):

@@ -141,37 +141,35 @@ def test_delete_tombstone_blocks_stale_resurrection(spark, table):
     assert list(out["text"]) == ["v3"]
 
 
-@pytest.mark.parametrize("modes", [("arrow", "sql")])
-def test_apply_modes_converge_identically(spark, tmp_path, events_pdf, modes):
-    """The Arrow file-granularity COW kernel and the Catalyst union/
-    max_by path must produce byte-identical final state (live rows AND
-    tombstones) over the same chunked replay."""
+def test_chunked_replay_tombstones_match_oracle(spark, tmp_path, events_pdf):
+    """Chunked replay through the Arrow kernel: live rows (winning lsn
+    included) equal the replay oracle, and the tombstones are exactly
+    the keys whose last event is a delete."""
     ev = change_events(spark, N_EVENTS, n_convs=60, seed=7)
-    states = []
-    for mode in modes:
-        t = LakeTable.create(
-            spark,
-            str(tmp_path / f"tbl_{mode}"),
-            TRANSCRIPT_SCHEMA,
-            key_cols=KEY_COLS,
-            seq_col="ts",
-            num_buckets=4,
-        )
-        for lo in range(0, N_EVENTS, 2500):
-            t.merge(ev.filter((ev.lsn >= lo) & (ev.lsn < lo + 2500)), mode=mode)
-        states.append(
-            t.read(include_deleted=True, include_system=True)
-            .toPandas()
-            .sort_values(KEY_COLS)
-            .reset_index(drop=True)
-        )
-    pd.testing.assert_frame_equal(states[0], states[1], check_like=True)
+    t = LakeTable.create(
+        spark,
+        str(tmp_path / "tbl"),
+        TRANSCRIPT_SCHEMA,
+        key_cols=KEY_COLS,
+        seq_col="ts",
+        num_buckets=4,
+    )
+    for lo in range(0, N_EVENTS, 2500):
+        t.merge(ev.filter((ev.lsn >= lo) & (ev.lsn < lo + 2500)))
+    state = t.read(include_deleted=True, include_system=True).toPandas()
+    live = state[~state["_deleted"]].rename(columns={"_lsn": "lsn"})
+    oracle.assert_states_equal(live, oracle.replay(events_pdf))
+
+    last = events_pdf.sort_values(["ts", "lsn"], kind="mergesort").groupby(KEY_COLS).tail(1)
+    want = set(map(tuple, last.loc[last["op"] == "D", KEY_COLS].values))
+    got = set(map(tuple, state.loc[state["_deleted"], KEY_COLS].values))
+    assert want and got == want
 
 
 def test_precombine_merge_converges_identically(spark, tmp_path, monkeypatch):
     """Opt-in map-side pre-combine (skew path): chunked replay with
     BEAR_MERGE_PRECOMBINE=1 must yield byte-identical state and the
-    same commit-stat totals as the raw arrow path."""
+    same commit-stat totals as the raw kernel path."""
     ev = change_events(spark, N_EVENTS, n_convs=60, seed=7)
     states, totals = [], []
     for pre in ("0", "1"):
@@ -185,7 +183,7 @@ def test_precombine_merge_converges_identically(spark, tmp_path, monkeypatch):
             num_buckets=4,
         )
         ms = [
-            t.merge(ev.filter((ev.lsn >= lo) & (ev.lsn < lo + 2500)), mode="arrow")
+            t.merge(ev.filter((ev.lsn >= lo) & (ev.lsn < lo + 2500)))
             for lo in range(0, N_EVENTS, 2500)
         ]
         totals.append(

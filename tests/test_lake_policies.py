@@ -1,6 +1,6 @@
 """Merge-policy edges: late-event admission (drop_late) vs tombstone
 expiry, bucket-hash stability across arrival types, and Arrow-kernel
-type coverage with SQL fallback for nested payloads."""
+type coverage (flat, binary, decimal and nested payloads)."""
 
 from __future__ import annotations
 
@@ -9,8 +9,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bear_spark.lake import LakeTable
-from bear_spark.lake.arrow_apply import supports_schema
-from bear_spark.schema import schema_to_json
 
 SCHEMA = T.StructType(
     [
@@ -22,37 +20,52 @@ SCHEMA = T.StructType(
 )
 
 
-def _events(spark, rows):
+EMB = T.StructField("emb", T.ArrayType(T.DoubleType()))
+
+# A flat payload and one with a nested array<double> column; the ids
+# name the merge route each took when nested payloads had a separate
+# SQL merge path. Both now merge through the Arrow kernel.
+PAYLOADS = [pytest.param(False, id="arrow"), pytest.param(True, id="sql")]
+
+
+def _with_emb(df, nested):
+    """Add an ``emb`` array column derived from the lsn when ``nested``."""
+    if not nested:
+        return df
+    return df.withColumn("emb", F.array(F.col("lsn").cast("double"), F.lit(0.5)))
+
+
+def _events(spark, rows, nested=False):
     """rows: (conv_id, turn_idx, text, ts_str, op, lsn)."""
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, text string, ts string, op string, lsn long"
     )
-    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return _with_emb(df.withColumn("ts", F.col("ts").cast("timestamp")), nested)
 
 
-@pytest.mark.parametrize("mode", ["arrow", "sql"])
-def test_drop_late_table_survives_expiry_without_resurrection(spark, tmp_path, mode):
+@pytest.mark.parametrize("nested", PAYLOADS)
+def test_drop_late_table_survives_expiry_without_resurrection(spark, tmp_path, nested):
     """On a drop_late table the watermark is a hard admission boundary,
     so expire_tombstones (watermark default) can never be beaten by a
     late stale update."""
     tbl = LakeTable.create(
         spark,
-        str(tmp_path / f"tbl_{mode}"),
-        SCHEMA,
+        str(tmp_path / "tbl"),
+        T.StructType(SCHEMA.fields + [EMB]) if nested else SCHEMA,
         key_cols=["conv_id", "turn_idx"],
         seq_col="ts",
         num_buckets=2,
         lateness_sec=0,
         drop_late=True,
     )
-    tbl.merge(_events(spark, [("c1", 0, "hello", "2024-01-10 00:00:00", "I", 1)]), mode=mode)
-    m = tbl.merge(_events(spark, [("c1", 0, None, "2024-01-11 00:00:00", "D", 2)]), mode=mode)
+    tbl.merge(_events(spark, [("c1", 0, "hello", "2024-01-10 00:00:00", "I", 1)], nested))
+    m = tbl.merge(_events(spark, [("c1", 0, None, "2024-01-11 00:00:00", "D", 2)], nested))
     assert m["tombstones"] == 1
     assert tbl.read().count() == 0
     # push the watermark strictly past the delete's event time (a
     # tombstone AT the watermark is still live — an equal-ts event with
     # a higher lsn remains admissible)
-    tbl.merge(_events(spark, [("c9", 0, "advance wm", "2024-01-12 00:00:00", "I", 10)]), mode=mode)
+    tbl.merge(_events(spark, [("c9", 0, "advance wm", "2024-01-12 00:00:00", "I", 10)], nested))
 
     out = tbl.expire_tombstones()  # watermark default is allowed here
     assert out["expired"] == 1
@@ -60,8 +73,7 @@ def test_drop_late_table_survives_expiry_without_resurrection(spark, tmp_path, m
     # a late, stale update (ts below the 2024-01-11 watermark) arrives:
     # it must be counted AND dropped, never resurrecting the deleted key
     m = tbl.merge(
-        _events(spark, [("c1", 0, "stale resurrect", "2024-01-05 00:00:00", "U", 3)]),
-        mode=mode,
+        _events(spark, [("c1", 0, "stale resurrect", "2024-01-05 00:00:00", "U", 3)], nested),
     )
     assert m["late_events"] == 1
     assert m["late_dropped"] == 1
@@ -103,8 +115,8 @@ def test_keep_late_table_applies_late_events(spark, tmp_path):
     assert tbl.read().count() == 2
 
 
-@pytest.mark.parametrize("mode", ["arrow", "sql"])
-def test_bucket_hash_stable_when_key_arrives_narrower(spark, tmp_path, mode):
+@pytest.mark.parametrize("nested", PAYLOADS)
+def test_bucket_hash_stable_when_key_arrives_narrower(spark, tmp_path, nested):
     """xxhash64 is type-sensitive: a batch whose bucket column arrives
     as int while the table stores long must still route each key to the
     same bucket (else LWW dedup splits across buckets)."""
@@ -114,10 +126,11 @@ def test_bucket_hash_stable_when_key_arrives_narrower(spark, tmp_path, mode):
             T.StructField("text", T.StringType()),
             T.StructField("ts", T.TimestampType()),
         ]
+        + ([EMB] if nested else [])
     )
     tbl = LakeTable.create(
         spark,
-        str(tmp_path / f"tbl_{mode}"),
+        str(tmp_path / "tbl"),
         schema,
         key_cols=["k"],
         seq_col="ts",
@@ -130,7 +143,7 @@ def test_bucket_hash_stable_when_key_arrives_narrower(spark, tmp_path, mode):
         F.lit("I").alias("op"),
         F.col("id").alias("lsn"),
     )
-    tbl.merge(base, mode=mode)
+    tbl.merge(_with_emb(base, nested))
     # same keys, narrower arrival type, newer ts
     upd = spark.range(50).select(
         F.col("id").cast("int").alias("k"),
@@ -139,10 +152,12 @@ def test_bucket_hash_stable_when_key_arrives_narrower(spark, tmp_path, mode):
         F.lit("U").alias("op"),
         (F.col("id") + 100).alias("lsn"),
     )
-    tbl.merge(upd, mode=mode)
+    tbl.merge(_with_emb(upd, nested))
     got = tbl.read().toPandas()
     assert len(got) == 50, "duplicate keys across buckets — hash routed by arrival type"
     assert set(got["text"]) == {"v2"}
+    if nested:
+        assert sorted(e[0] for e in got["emb"]) == [float(k + 100) for k in range(50)]
     # point lookup probes with the payload-schema type → same bucket
     assert tbl.lookup(7).toPandas()["text"].tolist() == ["v2"]
 
@@ -169,32 +184,96 @@ def test_bucket_column_type_widening_rejected(spark, tmp_path):
         tbl.merge(wide)
 
 
-def test_array_payload_falls_back_to_sql_on_default_merge(spark, tmp_path):
-    """An embedding array<double> payload can't take the Arrow kernel
-    (no hash-last kernel for lists) — the default merge must silently
-    use the SQL path instead of raising."""
+def test_nested_and_decimal_payloads_merge_through_the_kernel(spark, tmp_path):
+    """array, map, struct and decimal payloads take the one Arrow merge
+    path: updates, a delete, a null event time (always loses) and a null
+    key (one winner across batches) converge to the replay oracle."""
+    import datetime as dt
+    from decimal import Decimal
+
+    import pandas as pd
+
+    from bear_spark import oracle
+
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
             T.StructField("emb", T.ArrayType(T.DoubleType())),
+            T.StructField("attrs", T.MapType(T.StringType(), T.LongType())),
+            T.StructField(
+                "meta",
+                T.StructType(
+                    [T.StructField("src", T.StringType()), T.StructField("n", T.IntegerType())]
+                ),
+            ),
+            T.StructField("price", T.DecimalType(10, 2)),
             T.StructField("ts", T.TimestampType()),
         ]
     )
-    assert not supports_schema(schema_to_json(schema))
+    event_schema = T.StructType(
+        schema.fields
+        + [T.StructField("op", T.StringType()), T.StructField("lsn", T.LongType())]
+    )
+
+    def ev(doc, day, op, lsn, v):
+        ts = None if day is None else dt.datetime(2024, 1, day)
+        if op == "D":
+            return (doc, None, None, None, None, ts, op, lsn)
+        return (
+            doc, [float(v), v / 2.0], {"v": v, "doc": doc or 0},
+            {"src": f"s{v}", "n": v}, Decimal(v) / 4, ts, op, lsn,
+        )
+
+    batches = [
+        [ev(d, 1, "I", d, d) for d in range(6)] + [ev(None, 1, "I", 6, 60)],
+        [
+            ev(1, 2, "U", 10, 11),
+            ev(2, 2, "U", 11, 21),
+            ev(2, 3, "U", 12, 22),  # intra-batch LWW: the later ts wins
+            ev(3, 2, "D", 13, 0),
+            ev(4, None, "U", 14, 41),  # null event time loses to day 1
+            ev(None, 2, "U", 15, 61),
+        ],
+        [ev(None, 3, "U", 20, 62)],  # null key alone in its batch
+    ]
     tbl = LakeTable.create(
-        spark, str(tmp_path / "tbl"), schema, key_cols=["doc_id"], seq_col="ts", num_buckets=2
+        spark, str(tmp_path / "tbl"), schema, key_cols=["doc_id"], seq_col="ts",
+        num_buckets=2,
     )
-    df = spark.range(10).select(
-        F.col("id").alias("doc_id"),
-        F.array(F.col("id").cast("double"), F.lit(0.5)).alias("emb"),
-        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
-        F.lit("I").alias("op"),
-        F.col("id").alias("lsn"),
+    for rows in batches:
+        m = tbl.merge(spark.createDataFrame(rows, event_schema))
+        assert "lww_rows" in m
+
+    def canon(rec: dict) -> tuple:
+        meta = rec["meta"]
+        meta = meta.asDict() if hasattr(meta, "asDict") else meta
+        doc = rec["doc_id"]
+        return (
+            None if pd.isna(doc) else int(doc),
+            None if rec["emb"] is None else [float(x) for x in rec["emb"]],
+            None if rec["attrs"] is None else sorted(dict(rec["attrs"]).items()),
+            meta,
+            rec["price"],
+            rec["ts"],
+        )
+
+    cols = [f.name for f in event_schema.fields]
+    events = pd.DataFrame(
+        [r for rows in batches for r in rows], columns=cols, dtype=object
     )
-    m = tbl.merge(df)  # default mode=arrow → auto-fallback
-    assert m["rows_written"] == 10
-    got = tbl.read().toPandas().sort_values("doc_id")
-    assert got["emb"].iloc[3][0] == 3.0
+
+    def by_key(t: tuple) -> tuple:  # the null key first
+        return (t[0] is not None, t[0] or 0)
+
+    want = oracle.replay(events, key_cols=["doc_id"]).to_dict("records")
+    want = sorted(map(canon, want), key=by_key)
+    got = sorted((canon(r.asDict()) for r in tbl.read().collect()), key=by_key)
+    assert got == want
+    assert [g[0] for g in got] == [None, 0, 1, 2, 4, 5]
+    assert got[0][1] == [62.0, 31.0] and got[4][1] == [4.0, 2.0]
+    assert got[3][4] == Decimal("5.50") and got[3][3] == {"src": "s22", "n": 22}
+    tomb = tbl.read(include_deleted=True, include_system=True).filter("_deleted")
+    assert [r.doc_id for r in tomb.collect()] == [3]
 
 
 def test_merge_carries_over_range_pruned_files(spark, tmp_path):
@@ -219,7 +298,7 @@ def test_merge_carries_over_range_pruned_files(spark, tmp_path):
         seq_col="ts",
         num_buckets=1,  # one bucket → pruning, not bucketing, must save us
     )
-    tbl.merge(_events(spark, rows("a", "v1", 0, "2024-01-01 00:00:00")), mode="arrow")
+    tbl.merge(_events(spark, rows("a", "v1", 0, "2024-01-01 00:00:00")))
     snap1 = tbl.snapshot
     afile = snap1["files"]["0"][0]
     assert afile["kmin"] == "a00" and afile["kmax"] == "a49"
@@ -227,7 +306,7 @@ def test_merge_carries_over_range_pruned_files(spark, tmp_path):
     digest1 = hashlib.md5(open(apath, "rb").read()).hexdigest()
 
     # disjoint key range: the a-file must be carried over untouched
-    m = tbl.merge(_events(spark, rows("m", "v1", 100, "2024-01-02 00:00:00")), mode="arrow")
+    m = tbl.merge(_events(spark, rows("m", "v1", 100, "2024-01-02 00:00:00")))
     assert m["target_rows_read"] == 0, "a-file was read despite disjoint range"
     snap2 = tbl.snapshot
     paths2 = [fi["path"] for fi in snap2["files"]["0"]]
@@ -235,7 +314,7 @@ def test_merge_carries_over_range_pruned_files(spark, tmp_path):
 
     # touch one m-key: m-file rewritten, a-file carried again
     m = tbl.merge(
-        _events(spark, [("m10", 0, "v2", "2024-01-03 00:00:00", "U", 200)]), mode="arrow"
+        _events(spark, [("m10", 0, "v2", "2024-01-03 00:00:00", "U", 200)])
     )
     assert m["target_rows_read"] == 50, "only the m-file should be read"
     snap3 = tbl.snapshot
@@ -261,7 +340,6 @@ def test_binary_payload_supported_by_arrow_kernel(spark, tmp_path):
             T.StructField("ts", T.TimestampType()),
         ]
     )
-    assert supports_schema(schema_to_json(schema))
     tbl = LakeTable.create(
         spark, str(tmp_path / "tbl"), schema, key_cols=["doc_id"], seq_col="ts", num_buckets=2
     )
@@ -272,7 +350,7 @@ def test_binary_payload_supported_by_arrow_kernel(spark, tmp_path):
         F.lit("I").alias("op"),
         F.col("id").alias("lsn"),
     )
-    tbl.merge(df, mode="arrow")
+    tbl.merge(df)
     got = tbl.read().toPandas().sort_values("doc_id")
     assert bytes(got["payload"].iloc[2]) == b"blob-2"
 
@@ -489,12 +567,11 @@ def test_untouched_rows_pass_through_lww_under_schema_evolution(spark, tmp_path)
     seed = [
         (f"c{i:02d}", 0, f"v{i}", "2024-01-01 00:00:00", "I", i) for i in range(8)
     ]
-    tbl.merge(_events(spark, seed), mode="arrow")
+    tbl.merge(_events(spark, seed))
     # delete one key so the bucket also has a tombstone file whose rows
     # (except the contended one) must pass through unchanged
     tbl.merge(
         _events(spark, [("c03", 0, None, "2024-01-02 00:00:00", "D", 100)]),
-        mode="arrow",
     )
 
     # evolved batch: adds a `tool` column, touches ONLY c01 — the other
@@ -504,7 +581,7 @@ def test_untouched_rows_pass_through_lww_under_schema_evolution(spark, tmp_path)
         "conv_id string, turn_idx int, text string, ts string, tool string, "
         "op string, lsn long",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    m = tbl.merge(ev, mode="arrow")
+    m = tbl.merge(ev)
     assert m["schema_changes"], "tool column should evolve the schema"
     # work-reduction counters: only the batch row + the contended c01
     # row entered the LWW sort; the six other live rows rode the
@@ -638,35 +715,6 @@ def test_merge_partition_count_gives_parallelism_independent_waves(monkeypatch):
     # never below one task; defensive on zero parallelism
     monkeypatch.delenv("BEAR_MERGE_TASKS_PER_CORE", raising=False)
     assert merge_partition_count(1, 8, 0) == 1
-
-
-def test_sql_merge_splits_output_files_at_target_rows(spark, tmp_path):
-    """mode='sql' honors the same target_file_rows contract as the
-    arrow kernel: key-sorted chunks bounded by the knob, tight
-    non-overlapping manifest ranges — not one unbounded file per
-    bucket side."""
-    tbl = LakeTable.create(
-        spark,
-        str(tmp_path / "tbl"),
-        SCHEMA,
-        key_cols=["conv_id", "turn_idx"],
-        seq_col="ts",
-        num_buckets=1,
-    )
-    rows = [
-        (f"conv_{i:04d}", 0, f"t{i}", "2024-01-01 00:00:00", "I", i)
-        for i in range(250)
-    ]
-    m = tbl.merge(_events(spark, rows), mode="sql", target_file_rows=100)
-    assert m["rows_written"] == 250
-    live = [fi for fi in tbl.snapshot["files"]["0"] if not fi["deleted"]]
-    assert len(live) == 3, [fi["rows"] for fi in live]
-    assert sorted(fi["rows"] for fi in live) == [50, 100, 100]
-    # chunks are key-sorted and non-overlapping -> range pruning works
-    ranges = sorted((fi["kmin"], fi["kmax"]) for fi in live)
-    for (_lo1, hi1), (lo2, _hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2
-    assert tbl.read().count() == 250
 
 
 def test_concurrent_commit_loser_leaves_winner_intact(spark, tmp_path):

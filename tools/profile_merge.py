@@ -2,11 +2,13 @@
 
 Usage: python tools/profile_merge.py <cores> [n_events] [n_batches]
 Runs bench.bench_cdc (the exact benchmark code path) in-process and
-prints throughput; BEAR_DEBUG=1 adds per-phase timestamps from merge.
+prints throughput, plus merge's per-phase timestamps (the DEBUG records
+of the ``bear_spark.lake.table`` logger).
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import sys
 
@@ -21,6 +23,8 @@ def main() -> None:
     cores = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     n_events = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000
     n_batches = int(sys.argv[3]) if len(sys.argv) > 3 else 8
+    logging.basicConfig(format="[%(asctime)s] %(name)s: %(message)s")
+    logging.getLogger("bear_spark.lake.table").setLevel(logging.DEBUG)
     extra = {}
     if os.environ.get("BEAR_JAVA_OPTS"):
         extra["spark.driver.extraJavaOptions"] = os.environ["BEAR_JAVA_OPTS"]
