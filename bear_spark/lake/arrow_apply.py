@@ -43,6 +43,27 @@ def arrow_schema(spark_schema):
     return pa.schema([f.with_nullable(True) for f in to_arrow_schema(spark_schema)])
 
 
+def _opt_int(v):
+    """Source partition or offset bound of a stats group; None when it
+    is null (such rows apply unfenced and advance no commit-log range)."""
+    return None if v is None or v != v else int(v)
+
+
+def local_frame(spark, spark_schema, rows=()):
+    """Small driver-side rows as a Spark DataFrame backed by an Arrow
+    table. Spark plans it as a ``LocalTableScan``, which no Python worker
+    ever reads; a list-of-tuples ``createDataFrame`` instead goes
+    through ``sc.parallelize`` and costs a Python-worker stage wherever
+    it is scanned or broadcast."""
+    import pyarrow as pa
+
+    names = spark_schema.names
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=arrow_schema(spark_schema)
+    )
+    return spark.createDataFrame(table, spark_schema)
+
+
 def make_apply_kernel(
     manifests_by_bucket: dict[int, str],
     target_schema,
@@ -132,10 +153,10 @@ def make_apply_kernel(
                 mts = mts_series.iloc[idx].max()
                 stats.append(
                     {
-                        "sp": int(sp),
+                        "sp": _opt_int(sp),
                         "f": str(segf),
-                        "lo": int(pdf["_lo"].iloc[idx].min()),
-                        "hi": int(pdf["_hi"].iloc[idx].max()),
+                        "lo": _opt_int(pdf["_lo"].iloc[idx].min()),
+                        "hi": _opt_int(pdf["_hi"].iloc[idx].max()),
                         "c": int(pdf["_cnt"].iloc[idx].sum()),
                         "late": int(pdf["_late_cnt"].iloc[idx].sum()),
                         "mts": None if pd.isna(mts) else mts.isoformat(),
@@ -162,10 +183,10 @@ def make_apply_kernel(
                 mts = ts_series.iloc[idx].max()
                 stats.append(
                     {
-                        "sp": int(sp),
+                        "sp": _opt_int(sp),
                         "f": str(segf),
-                        "lo": int(sub_off.min()),
-                        "hi": int(sub_off.max()),
+                        "lo": _opt_int(sub_off.min()),
+                        "hi": _opt_int(sub_off.max()),
                         "c": int(len(idx)),
                         "late": int(late_mask.iloc[idx].sum()),
                         "mts": None if pd.isna(mts) else mts.isoformat(),

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bear_spark.lake import reconcile
+from bear_spark.lake.arrow_apply import local_frame
 from bear_spark.schema import schema_from_json, schema_to_json
 
 _SYS_FIELDS = [
@@ -58,6 +59,14 @@ _SYS_FIELDS = [
     T.StructField("_deleted", T.BooleanType(), True),
     T.StructField("_bucket", T.IntegerType(), True),
 ]
+# commit-log ranges as the fence's broadcast side
+_FENCE_SCHEMA = T.StructType(
+    [
+        T.StructField("_sp", T.IntegerType(), True),
+        T.StructField("_lo", T.LongType(), True),
+        T.StructField("_hi", T.LongType(), True),
+    ]
+)
 _ENVELOPE = ("op", "lsn", "source_partition", "offset", "_src_file")
 _log = logging.getLogger(__name__)
 
@@ -81,11 +90,20 @@ def merge_partition_count(
     measured 4-vs-2 dead neutral (39.5s mean both), so the default
     stays at the measured configuration. Always capped by the bucket
     count (a bucket never splits across tasks — the kernel's
-    clustered-distribution requirement).
+    clustered-distribution requirement). The shuffle places bucket ``b``
+    on task ``b mod n`` (``repartitionById``), so with ``n`` equal to
+    the bucket count every task gets exactly one bucket.
     """
     tpc = int(os.environ.get("BEAR_MERGE_TASKS_PER_CORE", "2"))
     want = max(shuffle_parts, tpc * max(1, default_parallelism))
     return max(1, min(buckets, want))
+
+
+def _bucket_slot(buckets: Sequence[int]):
+    """Partition id for a rewrite of a non-contiguous bucket set: each
+    row's bucket index in ``buckets``, so ``repartitionById`` deals the
+    rewritten buckets round-robin over the tasks."""
+    return (F.array_position(F.lit(list(buckets)), F.col("_bucket")) - 1).cast("int")
 
 
 def _merge_ranges(ranges: list[list[int]]) -> list[list[int]]:
@@ -399,7 +417,7 @@ class LakeTable:
                 os.path.join(self.root, fi["path"])
             )
         if not by_ver:
-            return self.spark.createDataFrame([], target)
+            return local_frame(self.spark, target)
         parts = []
         for ver, paths in sorted(by_ver.items()):
             phys = T.StructType(
@@ -442,9 +460,7 @@ class LakeTable:
         # type-sensitive, so a stringly-typed probe would land in the
         # wrong bucket for non-string keys
         fields = [payload[c] for c in snap["bucket_cols"]]
-        row = self.spark.createDataFrame(
-            [tuple(key_values)], T.StructType(fields)
-        )
+        row = local_frame(self.spark, T.StructType(fields), [key_values])
         bucket = row.select(self._bucket_expr(snap)).collect()[0][0]
         df = self.read(buckets=[bucket])
         for col, val in zip(snap["bucket_cols"], key_values):
@@ -675,6 +691,10 @@ class LakeTable:
         # partition (not a high-water mark): changelog files may arrive
         # out of order, and a replayed file must be fenced while an
         # unseen earlier file must still apply.
+        # The range table is an Arrow local relation, so the kernel stays
+        # the merge's only Python stage. The broadcast still collects it
+        # through one JVM job (a local scan has no collect-iterator
+        # shortcut); coalesce(1) keeps that job to a single task.
         if fence and has_env and snap["commit_log"]:
             rows = [
                 (int(p), int(lo), int(hi))
@@ -682,9 +702,7 @@ class LakeTable:
                 for lo, hi in ranges
             ]
             if rows:
-                rng = self.spark.createDataFrame(
-                    rows, "_sp int, _lo long, _hi long"
-                )
+                rng = local_frame(self.spark, _FENCE_SCHEMA, rows).coalesce(1)
                 batch = batch.join(
                     F.broadcast(rng),
                     (batch["source_partition"] == rng["_sp"])
@@ -801,6 +819,7 @@ class LakeTable:
             "schema_changes": changes,
             # per-source-partition applied-row lineage (north rule:
             # per-partition lineage/metrics); -1 = envelope-less batch
+            # or rows with a null source_partition
             "rows_by_partition": {str(k): v for k, v in sorted(per_partition.items())},
             **kernel_stats,
             # batch skew stat: drives the NEXT batch's adaptive map-side
@@ -970,14 +989,16 @@ class LakeTable:
         # coalescing (sized on the small batch-side shuffle, blind to
         # the table files each task will read) and satisfies the
         # clustered distribution applyInPandas requires — no second
-        # exchange.
+        # exchange. repartitionById sends bucket b to task b mod n_part;
+        # a murmur3 hash of the small bucket ids would pile several
+        # buckets onto one task and leave others idle.
         n_part = merge_partition_count(
             self._effective_buckets(snap),
             shuffle_parts,
             self.spark.sparkContext.defaultParallelism,
         )
         res = (
-            src_evt.repartition(n_part, "_bucket")
+            src_evt.repartitionById(n_part, "_bucket")
             .groupBy("_bucket")
             .applyInPandas(kernel, APPLY_RESULT_SCHEMA)
             .collect()
@@ -999,12 +1020,15 @@ class LakeTable:
             for s in _json.loads(r["stats"]):
                 rows_in += s["c"]
                 late_events += s["late"]
-                per_partition[int(s["sp"])] = per_partition.get(int(s["sp"]), 0) + s["c"]
+                sp = -1 if s["sp"] is None else s["sp"]
+                per_partition[sp] = per_partition.get(sp, 0) + s["c"]
                 if s["mts"] is not None:
                     t = pd.Timestamp(s["mts"]).to_pydatetime()
                     if max_ts is None or t > max_ts:
                         max_ts = t
-                k = (int(s["sp"]), s["f"])
+                if s["sp"] is None or s["lo"] is None:
+                    continue
+                k = (s["sp"], s["f"])
                 if k in seg:
                     seg[k][0] = min(seg[k][0], s["lo"])
                     seg[k][1] = max(seg[k][1], s["hi"])
@@ -1127,7 +1151,9 @@ class LakeTable:
             (
                 df.withColumn("_bucket_dir", F.col("_bucket"))
                 .withColumn("_del", F.col("_deleted"))
-                .repartition(max(1, min(len(children), shuffle_parts)), "_bucket")
+                .repartitionById(
+                    max(1, min(len(children), shuffle_parts)), _bucket_slot(children)
+                )
                 .sortWithinPartitions("_bucket_dir", "_del", *key_cols)
                 .write.option("maxRecordsPerFile", tfr)
                 .partitionBy("_bucket_dir", "_del")
@@ -1274,7 +1300,7 @@ class LakeTable:
         (
             df.withColumn("_bucket_dir", F.col("_bucket"))
             .withColumn("_del", F.col("_deleted"))
-            .repartition(len(frag), "_bucket")
+            .repartitionById(len(frag), _bucket_slot(frag))
             .sortWithinPartitions("_bucket_dir", "_del", *key_cols)
             .write.option("maxRecordsPerFile", tfr)
             .partitionBy("_bucket_dir", "_del")
@@ -1347,7 +1373,9 @@ class LakeTable:
         (
             keep.withColumn("_bucket_dir", F.col("_bucket"))
             .withColumn("_del", F.lit(True))
-            .repartition(max(1, min(len(dead_buckets), 32)), "_bucket")
+            .repartitionById(
+                max(1, min(len(dead_buckets), 32)), _bucket_slot(dead_buckets)
+            )
             .write.partitionBy("_bucket_dir", "_del")
             .mode("overwrite")
             .parquet(stage_dir)

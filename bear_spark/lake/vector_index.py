@@ -68,6 +68,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bear_spark.lake.arrow_apply import local_frame
 from bear_spark.operators import similarity as S
 
 logger = logging.getLogger(__name__)
@@ -539,7 +540,7 @@ class VectorIndex:
                     T.StructField("cos_sim", T.DoubleType()),
                 ]
             )
-            return self.table.spark.createDataFrame([], schema)
+            return local_frame(self.table.spark, schema)
         q = F.array(*[F.lit(float(x)) for x in query])
         return (
             cand.select(

@@ -338,3 +338,108 @@ def test_merge_under_extreme_key_skew_matches_oracle(spark, tmp_path):
         t.merge(ev.filter((ev.lsn >= lo) & (ev.lsn < lo + 2000)))
     expected = _oracle.replay(ev.toPandas())
     _oracle.assert_states_equal(t.read().toPandas(), expected)
+
+
+def test_fence_partial_overlap_applies_only_unapplied_offsets(spark, table):
+    """Two disjoint applied ranges per source partition (out-of-order
+    chunks), then one batch mixing applied offsets, offsets in the gap
+    between the ranges and rows with a null offset or partition: only
+    the gap rows and the null rows apply, and the commit log closes the
+    gap."""
+    import pyspark.sql.functions as F
+
+    # 8 source partitions, offsets 0..499 contiguous in each
+    ev = change_events(spark, 4000, n_convs=30, seed=23)
+    off, sp = F.col("offset"), F.col("source_partition")
+    assert not table.merge(ev.filter(off.between(300, 399)))["skipped"]
+    assert not table.merge(ev.filter(off.between(0, 99)))["skipped"]
+    assert table.applied_offsets() == {p: [[0, 99], [300, 399]] for p in range(8)}
+
+    # partitions 0-6 replay 50..349 (applied, gap 100..299, applied);
+    # every partition adds 400..449 with the offset nulled, so
+    # partition 7's rows in this batch carry no offset at all; partition
+    # 0 adds 450..459 with the partition nulled
+    mixed = ev.filter((sp < 7) & off.between(50, 349))
+    no_offset = ev.filter(off.between(400, 449)).withColumn(
+        "offset", F.lit(None).cast("long")
+    )
+    no_partition = ev.filter((sp == 0) & off.between(450, 459)).withColumn(
+        "source_partition", F.lit(None).cast("int")
+    )
+    m = table.merge(mixed.unionByName(no_offset).unionByName(no_partition))
+    assert m["rows_in"] == 7 * 200 + 8 * 50 + 10
+    assert m["rows_by_partition"]["-1"] == 10
+
+    want_log = {p: [[0, 399]] for p in range(7)}
+    want_log[7] = [[0, 99], [300, 399]]
+    assert table.applied_offsets() == want_log
+
+    applied = ev.filter(
+        off.between(0, 99)
+        | off.between(300, 449)
+        | ((sp < 7) & off.between(100, 299))
+        | ((sp == 0) & off.between(450, 459))
+    )
+    oracle.assert_states_equal(_live_state(table), oracle.replay(applied.toPandas()))
+
+
+def test_small_driver_relations_launch_no_python_rdd(spark, tmp_path, monkeypatch):
+    """The fence's range table, the lookup probe and an empty table's
+    scan are Arrow local relations: none of them may go through
+    ``SparkContext.parallelize``, which costs a Python-worker stage each
+    time the relation is used."""
+    import pyspark.sql.functions as F
+    from pyspark import SparkContext
+    from pyspark.sql import types as T
+
+    ev = change_events(spark, 4000, n_convs=30, seed=9)
+    strs = LakeTable.create(
+        spark, str(tmp_path / "str"), TRANSCRIPT_SCHEMA, key_cols=KEY_COLS, num_buckets=4
+    )
+    strs.merge(ev.filter(F.col("offset") < 300))
+
+    int_schema = T.StructType(
+        [
+            T.StructField("id", T.IntegerType()),
+            T.StructField("v", T.StringType()),
+            T.StructField("ts", T.TimestampType()),
+        ]
+    )
+    ints = LakeTable.create(
+        spark, str(tmp_path / "int"), int_schema, key_cols=["id"], num_buckets=4
+    )
+    ints.merge(
+        spark.range(300).select(
+            (F.col("id") % 50).cast("int").alias("id"),
+            F.concat(F.lit("v"), F.col("id").cast("string")).alias("v"),
+            F.timestamp_seconds("id").alias("ts"),
+            F.when(F.col("id") < 50, "I").otherwise("U").alias("op"),
+            F.col("id").alias("lsn"),
+        )
+    )
+    empty = LakeTable.create(
+        spark, str(tmp_path / "empty"), TRANSCRIPT_SCHEMA, key_cols=KEY_COLS
+    )
+
+    def _no_parallelize(self, *args, **kwargs):
+        raise AssertionError("SparkContext.parallelize called")
+
+    monkeypatch.setattr(SparkContext, "parallelize", _no_parallelize)
+
+    # fenced merge against a non-empty commit log: offsets 200..299 of
+    # every partition are already applied
+    m = strs.merge(ev.filter(F.col("offset") >= 200))
+    assert m["rows_in"] == 8 * 200
+    state = _live_state(strs)
+    oracle.assert_states_equal(state, oracle.replay(ev.toPandas()))
+
+    conv = state["conv_id"].iloc[0]
+    got = strs.lookup(conv).toPandas().sort_values(KEY_COLS).reset_index(drop=True)
+    want = state[state["conv_id"] == conv].sort_values(KEY_COLS).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_like=True)
+
+    # the last event for id 7 is lsn 257
+    assert ints.lookup(7).toPandas()["v"].tolist() == ["v257"]
+
+    rows = empty.read().toPandas()
+    assert rows.empty and list(rows.columns) == TRANSCRIPT_SCHEMA.names
